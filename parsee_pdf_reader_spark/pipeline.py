@@ -3,7 +3,7 @@
 Scale design (100 TB / 10^12 rows):
 
 - Extraction is a *pure map*: one input row (document) -> N output rows
-  (pages). It is expressed as a single ``mapInPandas`` stage so the plan
+  (pages). It is expressed as a single ``mapInArrow`` stage so the plan
   contains NO shuffle between scan and sink — Catalyst keeps column
   pruning (only ``url``/``html``/carried metadata are read) and any
   partition filters the caller applied (``lang``, ``days(warc_ts)``)
@@ -104,8 +104,7 @@ def _doc_to_rows(url, warc_ts, lang, blob, min_rows, min_cols,
 
 
 def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
-                  use_arrow: bool = True, ocr_engine=None,
-                  force_ocr: bool = False) -> DataFrame:
+                  ocr_engine=None, force_ocr: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang[, areas]) -> one row per
     extracted page. An optional ``areas`` column (AREAS_DDL) carries
     layout-model predictions (figure routing etc.).
@@ -117,63 +116,45 @@ def extract_pages(pages_df: DataFrame, min_rows: int = 2, min_cols: int = 1,
     it on every page, otherwise only where ``needs_ocr`` fires.
 
     A shuffle-free Arrow-batched map; the kernel is the only Python
-    stage in the plan. ``use_arrow=True`` emits pyarrow RecordBatches
-    directly (``mapInArrow``), skipping the pandas round-trip on the
-    deeply nested output structs (~20% faster end-to-end)."""
-    import pandas as pd
+    stage in the plan. It emits pyarrow RecordBatches directly
+    (``mapInArrow``), with no pandas round-trip on the deeply nested
+    output structs."""
+    import pyarrow as pa
+
+    from pyspark.sql.types import _parse_datatype_string
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     has_areas = "areas" in pages_df.columns
     sel = ["url", "warc_ts", "lang", "html"] + (
         ["areas"] if has_areas else [])
     src = pages_df.select(*sel)
 
-    if use_arrow:
-        import pyarrow as pa
+    arrow_schema = to_arrow_schema(
+        _parse_datatype_string(EXTRACT_SCHEMA))
 
-        from pyspark.sql.types import _parse_datatype_string
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(
-            _parse_datatype_string(EXTRACT_SCHEMA))
-
-        def run_arrow(batches: Iterator["pa.RecordBatch"]
-                      ) -> Iterator["pa.RecordBatch"]:
-            for batch in batches:
-                cols = {c: batch.column(c).to_pylist()
-                        for c in ("url", "warc_ts", "lang", "html")}
-                areas_col = (batch.column("areas").to_pylist()
-                             if has_areas else [None] * batch.num_rows)
-                rows = []
-                for url, ts, lang, blob, areas in zip(
-                        cols["url"], cols["warc_ts"], cols["lang"],
-                        cols["html"], areas_col):
-                    rows.extend(_doc_to_rows(url, ts, lang, blob,
-                                             min_rows, min_cols, areas,
-                                             ocr_engine, force_ocr))
-                if rows:
-                    arrays = [
-                        pa.array([r[f.name] for r in rows], type=f.type)
-                        for f in arrow_schema
-                    ]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, schema=arrow_schema)
-
-        return src.mapInArrow(run_arrow, schema=EXTRACT_SCHEMA)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
+    def run_arrow(batches: Iterator["pa.RecordBatch"]
+                  ) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            cols = {c: batch.column(c).to_pylist()
+                    for c in ("url", "warc_ts", "lang", "html")}
+            areas_col = (batch.column("areas").to_pylist()
+                         if has_areas else [None] * batch.num_rows)
             rows = []
-            areas_col = pdf["areas"] if has_areas else [None] * len(pdf)
             for url, ts, lang, blob, areas in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["html"],
-                    areas_col):
+                    cols["url"], cols["warc_ts"], cols["lang"],
+                    cols["html"], areas_col):
                 rows.extend(_doc_to_rows(url, ts, lang, blob,
                                          min_rows, min_cols, areas,
                                          ocr_engine, force_ocr))
             if rows:
-                yield pd.DataFrame(rows)
+                arrays = [
+                    pa.array([r[f.name] for r in rows], type=f.type)
+                    for f in arrow_schema
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    arrays, schema=arrow_schema)
 
-    return src.mapInPandas(run, schema=EXTRACT_SCHEMA)
+    return src.mapInArrow(run_arrow, schema=EXTRACT_SCHEMA)
 
 
 def tables_df_format(extracted_df: DataFrame) -> DataFrame:
@@ -328,9 +309,12 @@ def run_extraction(spark, input_path: str, output_path: str,
     out = extract_pages(df, min_rows, min_cols)
     sink_df = out.withColumn("ds", F.to_date("warc_ts"))
     if stats is not None:
+        import uuid
+
         from pyspark.sql import Observation
 
-        obs = Observation("run_extraction_rows")
+        # unique per call: two runs on one session never share metrics
+        obs = Observation(f"run_extraction_rows:{uuid.uuid4().hex}")
         sink_df = sink_df.observe(obs, F.count(F.lit(1)).alias("rows"))
     write_partitioned(sink_df, spark, output_path)
     if stats is not None:

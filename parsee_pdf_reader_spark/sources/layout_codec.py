@@ -140,12 +140,19 @@ class CharRun:
 
 class _EndChar:
     """Minimal tail proxy: the only attribute quirk callers read off
-    ``chars[-1]`` is ``x1``."""
+    ``chars[-1]`` is ``x1``. Any other attribute raises a descriptive
+    ``AttributeError`` instead of a bare slot miss."""
 
     __slots__ = ("x1",)
 
     def __init__(self, x1):
         self.x1 = x1
+
+    def __getattr__(self, name):
+        # only reached when normal lookup fails, i.e. never for x1
+        raise AttributeError(
+            f"RunSeq[-1] carries only x1, not {name!r}; index with "
+            "another value or iterate the RunSeq for full Char objects")
 
 
 class RunSeq:

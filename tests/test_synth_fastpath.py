@@ -80,3 +80,34 @@ def test_build_document_text_and_bytes_deterministic():
     b1, t1 = synth.build_document("fastpath-doc", 42, "alpha beta " * 60)
     b2, t2 = synth.build_document("fastpath-doc", 42, "alpha beta " * 60)
     assert b1 == b2 and t1 == t2
+
+
+def _run_seq():
+    from parsee_pdf_reader_spark.sources.layout_codec import CharRun, RunSeq
+
+    return RunSeq([CharRun("ab", [1000, 1550, 2100], 20.0, 30.0, 10.0,
+                           False),
+                   CharRun("c d", [2500, 3000, 3250, 3800], 20.0, 30.0,
+                           10.0, True)])
+
+
+def test_run_seq_tail_proxy_names_unsupported_attributes():
+    seq = _run_seq()
+    assert seq[-1].x1 == 38.0
+    for name in ("x0", "y0", "text", "size", "bold"):
+        with pytest.raises(AttributeError, match=f"only x1, not '{name}'"):
+            getattr(seq[-1], name)
+    assert not hasattr(seq[-1], "text")
+
+
+def test_run_seq_other_indexes_return_full_chars():
+    seq = _run_seq()
+    chars = seq.chars()
+    assert len(seq) == len(chars) == 5
+    for i in (0, 1, 3, -2, -5):
+        c = seq[i]
+        assert (c.x0, c.x1, c.text, c.bold) == (
+            chars[i].x0, chars[i].x1, chars[i].text, chars[i].bold)
+    assert (seq[0].x0, seq[0].x1, seq[0].text) == (10.0, 15.5, "a")
+    assert (seq[-2].x0, seq[-2].x1, seq[-2].bold) == (30.0, 32.5, False)
+    assert seq[-1].x1 == chars[-1].x1
